@@ -201,7 +201,12 @@ def inventory_cells(
             r0 = np.maximum(j0, ty * t)
             r1 = np.minimum(j1, ty * t + t - 1)
             ni = np.maximum(c1 - c0 + 1, 0)
-            nj = np.maximum(r1 - r0 + 1, 0)
+            # a tile with an empty column range (c1 < c0: tile indices
+            # truncate toward zero, so e.g. the last tile of a
+            # negative-x bbox) holds no cell; giving it no scanlines
+            # keeps its edges out of the per-segment histogram, whose
+            # slots [c0-1 .. c1] would otherwise be empty or negative
+            nj = np.where(ni > 0, np.maximum(r1 - r0 + 1, 0), 0)
 
             # chunk rows so scanline-pair lanes stay bounded
             lanes = nj * np.maximum(ne, 1) + ni * nj

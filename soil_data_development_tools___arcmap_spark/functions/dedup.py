@@ -576,6 +576,11 @@ def minhash_lsh_pairs(
     its fault-tolerance consequences)."""
     ex_all = None
     if reuse_shingles:
+        # Lazy on purpose (``_materialize``'s default eager=False),
+        # unlike ngram_jaccard_pairs' eager=True: the checkpoint runs
+        # with the first action that reads it instead of at
+        # construction. Results are the same either way; only when
+        # the upstream work is paid changes.
         ex_all = _materialize(
             _explode_ss(shingle_sets(_spread(df, id_col), id_col, col, k)),
         )

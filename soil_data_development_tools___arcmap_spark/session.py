@@ -27,6 +27,13 @@ _DEFAULTS = {
     # what keeps per-task state spill-free when the input grows 10-100x
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "128",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Below this many reducers Spark's bypass-merge shuffle writer opens
+    # one file per reducer in every map task and then concatenates them:
+    # 128 file opens per map task at initialPartitionNum above. 0 keeps
+    # every shuffle on the serialized sort writer (one file per map
+    # task), the writer Spark already picks at >= 200 partitions, so
+    # all scales run the same writer.
+    "spark.shuffle.sort.bypassMergeThreshold": "0",
     # Deterministic timestamp behavior (matches DuckDB's naive handling).
     "spark.sql.session.timeZone": "UTC",
     # Arrow for pandas_udf / mapInPandas paths.

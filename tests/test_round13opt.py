@@ -62,15 +62,31 @@ def test_inventory_kernel_matches_column_adversarial(spark):
                 "((10 10, 14 10, 14 14, 10 14, 10 10)))")
     # degenerate: <3 vertices after parse
     wkts.append("POLYGON ((2 2, 2 2, 2 2))")
+    # signed coordinates: bboxes left of / below zero and straddling it.
+    # Tile indices truncate toward zero, so the last tile of a
+    # negative-x bbox can have an empty column range; they are also
+    # checked on their own, where that tile leads its Arrow batch.
+    n_unsigned = len(wkts)
+    wkts.append("POLYGON ((-15 1, -13 1, -13 9, -15 9, -15 1))")
+    wkts.append("POLYGON ((1 -15, 9 -15, 9 -13, 1 -13, 1 -15))")
+    wkts.append("POLYGON ((-20 -20, -2 -20, -2 -2, -20 -2, -20 -20), "
+                "(-12 -12, -8 -12, -8 -8, -12 -8, -12 -12))")
+    wkts.append("POLYGON ((-7 -5, 6 -3, 3 8, -4 6, -7 -5))")
+    wkts.append("MULTIPOLYGON (((-9 -9, -5 -9, -5 -5, -9 -5, -9 -9)), "
+                "((3 -9, 7 -9, 7 -5, 3 -5, 3 -9)))")
+    for i in range(20):
+        pts = _random_ring(rng, rng.randrange(3, 9))
+        wkts.append(_ring_wkt([(x - 10, y - 10) for x, y in pts]))
     df = spark.createDataFrame(
         [(i, w) for i, w in enumerate(wkts)], "k int, wkt string"
     )
+    signed_df = df.where(F.col("k") >= n_unsigned)
 
-    def cells(mode, cs, tc):
+    def cells(mode, cs, tc, frame=df):
         spark.conf.set("spark.graft.geom.kernel", mode)
         try:
             out = polygon_cell_inventory(
-                df, cell_size=cs, tile_cells=tc
+                frame, cell_size=cs, tile_cells=tc
             ).collect()
         finally:
             spark.conf.set("spark.graft.geom.kernel", "arrow")
@@ -84,7 +100,13 @@ def test_inventory_kernel_matches_column_adversarial(spark):
         a = cells("arrow", cs, tc)
         b = cells("column", cs, tc)
         assert a == b, (cs, tc, len(a), len(b))
+    for cs, tc in ((2, 4), (2, 64)):
+        a = cells("arrow", cs, tc, signed_df)
+        b = cells("column", cs, tc, signed_df)
+        assert a == b, ("signed", cs, tc, len(a), len(b))
     assert len(cells("arrow", 2, 4)) > 100  # non-vacuous
+    signed = {r[0] for r in cells("arrow", 2, 4, signed_df)}
+    assert len(signed) > 20  # the signed rings reach the kernel
 
 
 def test_points_kernel_matches_column_adversarial(spark):
