@@ -46,7 +46,7 @@ _SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 
 def _file_key(path: str) -> tuple | None:
     """(name, size, mtime_ns) of every file under a local parquet path
-    (a single file or a directory), or None when it is not local."""
+    (a single file or a directory); None for a URI or a missing path."""
     if "://" in path or not os.path.exists(path):
         return None
     files = [path] if os.path.isfile(path) else [
